@@ -107,7 +107,7 @@ def longdoc(sf_dir: str, repeat: int = 10) -> None:
             "doc_id", F.split(F.col("text"), " ").alias("_tk")
         )
         arrays = d.select(
-            "doc_id", bigram_shingles(F.col("_tk")).alias("sh")
+            "doc_id", bigram_shingles("_tk").alias("sh")
         )
         return _sig_bands_arrays(arrays)
 

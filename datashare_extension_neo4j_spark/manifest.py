@@ -144,7 +144,7 @@ def run_pipeline(
     from .operators.entities import entity_nodes
     from .operators.extract import parse_pages
     from .operators.ner import DEFAULT_GAZETTEER, annotated_mentions
-    from .sinks.tables import TABLE_KEYS, write_bucketed_table
+    from .sinks.tables import write_graph_table
 
     # captured BEFORE Manifest creates the dir: a pre-existing manifest
     # means prior-run tables may be present (migration ladder must run
@@ -154,9 +154,7 @@ def run_pipeline(
     out = lambda name: str(Path(run_dir) / name)  # noqa: E731
 
     def write(df: DataFrame, table: str | None = None):
-        if buckets and table in TABLE_KEYS:
-            return lambda path: write_bucketed_table(df, path, table, buckets)
-        return lambda path: df.write.mode("overwrite").parquet(path)
+        return lambda path: write_graph_table(df, path, table, buckets)
 
     pages = spark.read.parquet(pages_path)
     parsed_path = m.run_stage(

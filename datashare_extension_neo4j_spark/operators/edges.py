@@ -18,6 +18,12 @@ in Spark that whole mechanism IS hash aggregation with spill; the
 semantic content is just the groupBy below. For degree-heavy entities
 (hot mentionNorms at 10^12 docs) the salted variant pre-aggregates on
 (key, salt) before the final merge, collapsing skewed partitions.
+
+Consumers: the pipeline (build_graph, manifest.run_pipeline and the
+incremental imports in sinks/tables) and the KG registry, whose
+kg_appears_in / kg_appears_in_salted / kg_email_edges queries are thin
+adapters over appears_in_edges / email_edges — so their DuckDB oracle
+hashes check these operators, not a second implementation.
 """
 
 from __future__ import annotations

@@ -33,7 +33,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _SKIP_TAGS = {"script", "style", "head"}
@@ -345,18 +344,3 @@ def parse_pages(
 
     return pages.mapInPandas(run, schema)
 
-
-def with_extracted_text(pages: DataFrame) -> DataFrame:
-    """Minimal variant: fill the text column only (byte-identical rule).
-
-    Keeps the page schema; used by the invariant tests and by callers
-    that don't need document parsing.
-    """
-
-    @F.pandas_udf("string")
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(extract_text)
-
-    return pages.withColumn(
-        "text", F.coalesce(F.col("text"), _extract(F.col("html")))
-    )

@@ -21,7 +21,7 @@ else AQE picks the strategy.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,6 +32,7 @@ from .operators.edges import appears_in_edges, email_edges
 from .operators.entities import entity_nodes
 from .operators.extract import parse_pages
 from .operators.ner import annotated_mentions, rule_based_mentions
+from .session import widen
 
 
 @dataclass
@@ -43,7 +44,6 @@ class GraphBuild:
     appears_in: DataFrame
     emails: DataFrame
     parsed: DataFrame | None = None
-    counters: dict = field(default_factory=dict)
 
     def unpersist(self) -> None:
         if self.parsed is not None:
@@ -65,40 +65,9 @@ def build_graph(
     emit_mentions: bool = True,
     checkpoint_dir: str | None = None,
 ) -> GraphBuild:
-    # scale-adaptive parse parallelism (r6): a small pages input (one
-    # parquet file → one scan split) would serialize the Python parse
-    # kernel on a single core; widen ONLY when the scan is narrower
-    # than the cluster. At real scale the input already carries >=
-    # defaultParallelism splits and this is a no-op — no constant
-    # tuned to either mode. Round-robin repartition is retry-safe
-    # (sortBeforeRepartition) and the pipeline's output is
-    # partitioning-independent (per-doc aggregation keys). The probe
-    # reads input file sizes (early-exit once past the threshold,
-    # ~ms) rather than converting the plan to an RDD (~0.25 s of
-    # driver wall); non-file sources fall back to the exact
-    # plan-derived partition count.
-    spark = pages.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    threshold = target * 4 * 1024 * 1024  # openCostInBytes floor
-    narrow = None
-    try:
-        files = pages.inputFiles()
-        if files:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            total = 0
-            for f in files:
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                total += p.getFileSystem(conf).getFileStatus(p).getLen()
-                if total >= threshold:
-                    break
-            narrow = total < threshold
-    except Exception:
-        narrow = None
-    if narrow is None:
-        narrow = pages.rdd.getNumPartitions() < target
-    if narrow:
-        pages = pages.repartition(target)
+    # scale-adaptive parse parallelism: a small pages input would
+    # serialize the Python parse kernel on a single core (session.widen)
+    pages = widen(pages)
     if fuse_ner:
         # scale path: NER fused into the parse pass (one scan over the
         # html) and the wide text column dropped from the exchange

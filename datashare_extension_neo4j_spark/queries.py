@@ -11,7 +11,9 @@ Parity rules (the driver hash-compares values):
 The KG queries re-express the reference's operators over the driver's
 ``documents`` table treated as the page corpus: doc ids ``doc-{i}``,
 root chain ``doc-{i - i%5}``, gazetteer mentions from word tokens.
-Reference semantics cited per query.
+Entity nodes, APPEARS_IN and SENT/RECEIVED edges are derived by the
+pipeline's own operators (operators/), so their oracles check the code
+the pipeline runs. Reference semantics cited per query.
 """
 
 from __future__ import annotations
@@ -19,8 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .constants import NE_NODE, NEO4J_ARRAY_SPLIT_CHAR
+from .constants import EMAIL_HEADER, NEO4J_ARRAY_SPLIT_CHAR
 from .functions.hashing import entity_id
+from .operators.edges import appears_in_edges, email_edges
+from .operators.entities import entity_nodes
+from .session import widen as _widen
 
 ROOT_STRIDE = 5
 
@@ -61,52 +66,6 @@ def _customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/customer.parquet")
 
 
-# planning-metadata memo only (never query results): per-process cache
-# of "is this input narrower than the cluster" decisions, so repeated
-# constructions don't re-ask the filesystem
-_WIDEN_CACHE: dict = {}
-
-
-def _widen(df: DataFrame, path: str | None = None) -> DataFrame:
-    """Scale-adaptive parallelism guard (guide §2.5, input skew): a
-    small input (one parquet file → one scan split) serializes every
-    downstream map stage on a single core, which matters for the
-    hash-heavy kernels (8-seed MinHash md5, SimHash bit votes). Widen
-    with a round-robin repartition ONLY when the scan is narrower than
-    the cluster; at real scale the scan already carries >=
-    defaultParallelism splits and this is a structural no-op — nothing
-    is tuned to either mode. Round-robin is retry-safe
-    (sortBeforeRepartition) and every consumer's result is
-    partitioning-independent.
-
-    With ``path`` the decision reads the input's byte size from the
-    (Hadoop) filesystem — ~10 ms, memoized per process — instead of
-    converting the plan to an RDD (~0.2 s of driver wall per query
-    construction). The split math mirrors Spark's: with
-    openCostInBytes = 4 MB the scan cannot reach ``n`` splits when the
-    input is under n × 4 MB, and reaches it comfortably above; the
-    band between is a no-widen (the scan is already within ~32× of
-    the cluster width). Without ``path`` (derived inputs) the exact
-    plan-derived partition count is used."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    if path is not None:
-        key = (path, n)
-        if key not in _WIDEN_CACHE:
-            try:
-                jvm = spark._jvm
-                p = jvm.org.apache.hadoop.fs.Path(path)
-                fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-                size = fs.getContentSummary(p).getLength()
-                _WIDEN_CACHE[key] = size < n * 4 * 1024 * 1024
-            except Exception:
-                _WIDEN_CACHE[key] = df.rdd.getNumPartitions() < n
-        return df.repartition(n) if _WIDEN_CACHE[key] else df
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
-
-
 def _doc_id() -> F.Column:
     return F.concat(F.lit("doc-"), F.col("doc_id"))
 
@@ -130,18 +89,15 @@ def _words(docs: DataFrame) -> DataFrame:
     ).where(F.col("word") != "")
 
 
-def _gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GAZETTEER, "word string, category string")
-
-
 def _gazetteer_category() -> F.Column:
     """word → category as a literal CASE/map lookup — the gazetteer is
     a fixed 8-entry constant, so an inner join against it is exactly a
-    filter + projection. Replacing the broadcast join (r6) removes the
-    createDataFrame round-trip + BroadcastExchange from every consumer
-    (kg_mentions/kg_entities/kg_appears_in/kg_triples/…): the mention
-    stream becomes a pure scan-shaped plan. NULL where not in the
-    gazetteer (callers filter)."""
+    filter + projection with no createDataFrame round-trip and no
+    BroadcastExchange. Its consumers are the two gazetteer mention
+    streams: ``_mentions``, which feeds kg_mentions and the operator
+    adapters kg_entities/kg_appears_in/kg_appears_in_salted among other
+    KG queries, and ``_timed_mentions``. Both stay pure scan-shaped
+    plans. NULL where not in the gazetteer (callers filter)."""
     m = F.create_map(
         *[F.lit(x) for word, cat in GAZETTEER for x in (word, cat)]
     )
@@ -158,9 +114,7 @@ def _mentions(
     explode + partial agg otherwise serializes on a narrow scan);
     plain stream consumers (kg_mentions) stay scan-shaped."""
     d = _docs(spark, sf_dir)
-    w = _words(
-        _widen(d, path=f"{sf_dir}/documents.parquet") if widen else d
-    )
+    w = _words(_widen(d) if widen else d)
     return (
         w.withColumn("category", _gazetteer_category())
         .where(F.col("category").isNotNull())
@@ -268,18 +222,10 @@ ORACLE_KG_MENTIONS = _MENTIONS_CTE + "SELECT * FROM m"
 
 def kg_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5+J4: entity dedup + sha256 tuple-repr ids + label composition
-    (to_neo4j.py:196-217)."""
-    m = _mentions(spark, sf_dir, widen=True)
-    return (
-        m.select("mentionNorm", "category")
-        .dropDuplicates(["mentionNorm", "category"])
-        .select(
-            entity_id(F.col("mentionNorm"), F.col("category")).alias("entityId"),
-            "mentionNorm",
-            F.concat(
-                F.lit(NE_NODE), F.lit(NEO4J_ARRAY_SPLIT_CHAR), F.col("category")
-            ).alias("label"),
-        )
+    (to_neo4j.py:196-217) — the pipeline's entity_nodes operator over
+    the gazetteer mention stream."""
+    return entity_nodes(_mentions(spark, sf_dir, widen=True)).select(
+        "entityId", "mentionNorm", "label"
     )
 
 
@@ -291,37 +237,38 @@ FROM (SELECT DISTINCT mentionNorm, category FROM m)
 """
 
 
+def _appears_in(mentions: DataFrame, salted: bool = False) -> DataFrame:
+    """The pipeline's appears_in_edges operator over a gazetteer
+    mention stream, mapped onto the operator's mention columns. The
+    stream carries no extractor or language, so both are null; Spark
+    prunes their aggregates because the oracle's columns never read
+    them. mentionCount is the size of the collected ids — no distinct
+    aggregate, so no Expand node and one hash exchange (unsalted)."""
+    m = mentions.select(
+        F.col("mention_id").alias("id"),
+        "documentId",
+        "category",
+        "mentionNorm",
+        F.array("offset").alias("offsets"),
+        F.lit(None).cast("string").alias("extractor"),
+        F.lit(None).cast("string").alias("extractorLanguage"),
+    )
+    return joined_arrays(appears_in_edges(m, salted=salted)).select(
+        "startId",
+        "endId",
+        "type",
+        "mentionNorm",
+        "category",
+        "mentionIds",
+        "offsets",
+        F.col("mentionCount").cast("long").alias("mentionCount"),
+    )
+
+
 def kg_appears_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2/A7: APPEARS_IN aggregation — sorted '|'-joined arrays,
     mentionCount (imports.py:751-773, to_neo4j.py:266-277)."""
-    m = _mentions(spark, sf_dir, widen=True)
-    # mentionCount = |collect_set(mention_id)| instead of
-    # countDistinct: same value (the set IS the distinct ids), but a
-    # distinct aggregate alongside non-distinct aggs plans an Expand +
-    # second exchange — r6 drops it for a single hash-agg shuffle
-    return (
-        m.groupBy("mentionNorm", "category", "documentId")
-        .agg(
-            F.array_sort(F.collect_set("mention_id")).alias("_mids"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_set("offset")),
-                    lambda x: x.cast("string"),
-                ),
-                NEO4J_ARRAY_SPLIT_CHAR,
-            ).alias("offsets"),
-        )
-        .select(
-            entity_id(F.col("mentionNorm"), F.col("category")).alias("startId"),
-            F.col("documentId").alias("endId"),
-            F.lit("APPEARS_IN").alias("type"),
-            "mentionNorm",
-            "category",
-            F.array_join("_mids", NEO4J_ARRAY_SPLIT_CHAR).alias("mentionIds"),
-            "offsets",
-            F.size("_mids").cast("long").alias("mentionCount"),
-        )
-    )
+    return _appears_in(_mentions(spark, sf_dir, widen=True))
 
 
 ORACLE_KG_APPEARS_IN = _MENTIONS_CTE + f"""
@@ -341,36 +288,25 @@ GROUP BY mentionNorm, category, documentId
 
 def kg_email_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: SENT/RECEIVED classification by header membership
-    (constants.py:70-76, to_neo4j.py:235-249), deterministic synthetic
-    email per document."""
-    d = _docs(spark, sf_dir)
-    norm = F.concat(F.lit("user"), F.col("doc_id") % 50, F.lit("@example.com"))
+    (constants.py:70-76, to_neo4j.py:235-249) — the pipeline's
+    email_edges operator, header classifier included, over one
+    deterministic synthetic email mention per document."""
     header = F.when(
         F.col("doc_id") % 2 == 0, F.lit("tika_metadata_message_from")
     ).otherwise(F.lit("tika_metadata_message_to"))
-    typ = F.when(F.col("doc_id") % 2 == 0, F.lit("SENT")).otherwise(
-        F.lit("RECEIVED")
+    m = _docs(spark, sf_dir).select(
+        F.concat(
+            F.lit("user"), F.col("doc_id") % 50, F.lit("@example.com")
+        ).alias("mentionNorm"),
+        F.lit("EMAIL").alias("category"),
+        _doc_id().alias("documentId"),
+        F.create_map(F.lit(EMAIL_HEADER), header).alias("metadata"),
     )
-    return (
-        d.select(
-            norm.alias("mentionNorm"),
-            F.lit("EMAIL").alias("category"),
-            _doc_id().alias("endId"),
-            typ.alias("type"),
-            header.alias("fields"),
-        )
-        .groupBy("mentionNorm", "category", "endId", "type")
-        .agg(
-            F.array_join(
-                F.array_sort(F.collect_set("fields")), NEO4J_ARRAY_SPLIT_CHAR
-            ).alias("fields")
-        )
-        .select(
-            entity_id(F.col("mentionNorm"), F.col("category")).alias("startId"),
-            "endId",
-            "type",
-            "fields",
-        )
+    return email_edges(m).select(
+        "startId",
+        "endId",
+        "type",
+        F.array_join("fields", NEO4J_ARRAY_SPLIT_CHAR).alias("fields"),
     )
 
 
@@ -779,13 +715,9 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushdown inline the WHOLE shingle expression below the widen
     # exchange — where the lambda-substituted split(text) re-evaluates
     # per array element: the exact O(tokens²) this round removes.
-    d = (
-        _widen(
-            _docs(spark, sf_dir).where(F.col("text").rlike("[^ ] [^ ]")),
-            path=f"{sf_dir}/documents.parquet",
-        )
-        .select("doc_id", F.split(F.col("text"), " ").alias("_tk"))
-    )
+    d = _widen(
+        _docs(spark, sf_dir).where(F.col("text").rlike("[^ ] [^ ]"))
+    ).select("doc_id", F.split(F.col("text"), " ").alias("_tk"))
     return d.select("doc_id", bigram_shingles("_tk").alias("sh"))
 
 
@@ -1170,9 +1102,7 @@ _DECONTAM_N = 2  # registry entry: bigrams (the test corpus's tiny
 # width — exercised at n=13 in tests/test_extras.py on synthetic docs
 
 
-def _ngram_shingles(
-    docs: DataFrame, n: int, path: str | None = None
-) -> DataFrame:
+def _ngram_shingles(docs: DataFrame, n: int) -> DataFrame:
     """Distinct word n-gram shingles per doc as 64-bit hashes
     (xxhash64): at real n (13) the shingle STRINGS are ~100 bytes each
     and the broadcast eval set would balloon; the hashes keep it at
@@ -1185,7 +1115,7 @@ def _ngram_shingles(
     the r5 O(tokens²) finding), and per-doc ``array_distinct`` over
     the hashed grams replaces the global ``.distinct()`` shuffle
     ((doc_id, hash) is globally distinct once distinct per doc)."""
-    t = _widen(docs, path=path).select(
+    t = _widen(docs).select(
         "doc_id", F.split(F.col("text"), " ").alias("_tk")
     )
     tk = F.col("_tk")
@@ -1225,9 +1155,7 @@ def decontaminate_ngram(
     make an any-overlap flag vacuous. (The oracle counts distinct
     shingle strings; hashed counts match it absent a 64-bit collision
     — odds ~1e-10 at 10^5 distinct shingles.)"""
-    sh = _ngram_shingles(
-        _docs(spark, sf_dir), n, path=f"{sf_dir}/documents.parquet"
-    )
+    sh = _ngram_shingles(_docs(spark, sf_dir), n)
     bench = (
         sh.where(F.col("doc_id") % _EVAL_MOD == 0).select("shingle").distinct()
     )
@@ -2780,10 +2708,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown would inline as a second full hash pass at the
     scan."""
     b = _SIMHASH_BITS
-    d = _widen(
-        _docs(spark, sf_dir).where(F.col("text").rlike("[^ ]")),
-        path=f"{sf_dir}/documents.parquet",
-    )
+    d = _widen(_docs(spark, sf_dir).where(F.col("text").rlike("[^ ]")))
     staged = d.select(
         "doc_id",
         F.expr(
@@ -3495,7 +3420,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     products don't serialize on a single narrow scan split."""
     from .operators.similarity import cosine_topk
 
-    e = _widen(_emb(spark, sf_dir), path=f"{sf_dir}/embeddings.parquet")
+    e = _widen(_emb(spark, sf_dir))
     q = e.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -3794,49 +3719,11 @@ ORACLE_PII_SCRUB = _oracle_pii()
 
 def kg_appears_in_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: two-level salted APPEARS_IN aggregation for degree-heavy
-    keys — partial agg on (key, salt) collapses hot mentionNorms
-    before the final shuffle. Output (and oracle) identical to
-    kg_appears_in: salting is an execution strategy, not semantics."""
-    m = _mentions(spark, sf_dir).withColumn(
-        "_salt", F.pmod(F.xxhash64("mention_id"), F.lit(8))
-    )
-    partial = m.groupBy("mentionNorm", "category", "documentId", "_salt").agg(
-        F.collect_set("mention_id").alias("_ids"),
-        F.collect_set("offset").alias("_offs"),
-    )
-    return (
-        partial.groupBy("mentionNorm", "category", "documentId")
-        .agg(
-            F.array_join(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_ids")))
-                ),
-                NEO4J_ARRAY_SPLIT_CHAR,
-            ).alias("mentionIds"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("_offs")))
-                    ),
-                    lambda x: x.cast("string"),
-                ),
-                NEO4J_ARRAY_SPLIT_CHAR,
-            ).alias("offsets"),
-            F.size(
-                F.array_distinct(F.flatten(F.collect_list("_ids")))
-            ).cast("long").alias("mentionCount"),
-        )
-        .select(
-            entity_id(F.col("mentionNorm"), F.col("category")).alias("startId"),
-            F.col("documentId").alias("endId"),
-            F.lit("APPEARS_IN").alias("type"),
-            "mentionNorm",
-            "category",
-            "mentionIds",
-            "offsets",
-            "mentionCount",
-        )
-    )
+    keys — the operator's salted variant pre-aggregates on (key, salt),
+    collapsing hot mentionNorms before the final shuffle. Output (and
+    oracle) identical to kg_appears_in: salting is an execution
+    strategy, not semantics."""
+    return _appears_in(_mentions(spark, sf_dir), salted=True)
 
 
 _ANN_BITS, _ANN_TABLES, _ANN_DIM, _ANN_K = 4, 8, 64, 5
@@ -5965,7 +5852,8 @@ QUERIES = {
     "anti_join": (anti_join, ORACLE_ANTI_JOIN),
     "rollup_demo": (rollup_demo, ORACLE_ROLLUP_DEMO),
     "pivot_demo": (pivot_demo, ORACLE_PIVOT_DEMO),
-    "percentiles_demo": (percentiles_demo, ORACLE_PERCENTILES_DEMO),    # ---- entries below were all driver-checked green in
+    "percentiles_demo": (percentiles_demo, ORACLE_PERCENTILES_DEMO),
+    # ---- entries below were all checked green in
     # CORRECTNESS_r05; every entry (above and below) is additionally
     # oracle-verified each run by tests/test_oracle_parity.py
     "kg_doc_nodes": (kg_doc_nodes, ORACLE_KG_DOC_NODES),

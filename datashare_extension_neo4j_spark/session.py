@@ -2,14 +2,17 @@
 
 Local-mode defaults sized for the sandbox (local[32], single JVM); the
 same conf block is what we'd pass to spark-submit on a real cluster —
-AQE + skew-join on, Arrow on, shuffle partitions ~= 2-3x cores.
+AQE + skew-join on, Arrow on, shuffle partitions ~= 2-3x cores. Also
+home of ``widen``, the one scan-widen probe the pipeline and the
+registry queries share.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -71,3 +74,47 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def widen(df: DataFrame) -> DataFrame:
+    """Scale-adaptive parallelism guard against input skew: a
+    small input (one parquet file → one scan split) serializes every
+    downstream map stage on a single core — the Python parse kernel,
+    the token explode + partial aggregations, the hash-heavy kernels
+    (MinHash md5, SimHash bit votes). Widen with a round-robin
+    repartition ONLY when the scan is narrower than the cluster; at
+    real scale the scan already carries >= defaultParallelism splits
+    and this is a structural no-op — nothing is tuned to either mode.
+    Round-robin is retry-safe (sortBeforeRepartition) and every
+    consumer's result is partitioning-independent.
+
+    The decision sums the byte lengths of ``df.inputFiles()`` (early
+    exit past the threshold, a few ms) instead of converting the plan
+    to an RDD (~0.2 s of driver wall). The split math mirrors Spark's:
+    with openCostInBytes = 4 MB the scan cannot reach ``n`` splits
+    when the input is under n × 4 MB, and reaches it comfortably
+    above. Nothing is memoized, so a path rewritten in a long-lived
+    driver is probed afresh. Frames with no input files (in-memory or
+    derived-only sources), or whose files cannot be stat'ed, fall back
+    to the exact plan-derived partition count."""
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    threshold = n * 4 * 1024 * 1024
+    narrow = None
+    try:
+        files = df.inputFiles()
+        if files:
+            jvm = spark._jvm
+            conf = spark._jsc.hadoopConfiguration()
+            total = 0
+            for f in files:
+                p = jvm.org.apache.hadoop.fs.Path(f)
+                total += p.getFileSystem(conf).getFileStatus(p).getLen()
+                if total >= threshold:
+                    break
+            narrow = total < threshold
+    except Py4JJavaError:
+        pass  # file vanished or unreadable status: count partitions
+    if narrow is None:
+        narrow = df.rdd.getNumPartitions() < n
+    return df.repartition(n) if narrow else df

@@ -124,6 +124,67 @@ def _write_single(lines: DataFrame, path: Path, sort: bool = True) -> int:
     return n
 
 
+def _csv_specs(
+    docs: DataFrame,
+    doc_roots: DataFrame,
+    entities: DataFrame,
+    appears_in: DataFrame,
+    emails: DataFrame,
+) -> list[tuple[str, list[str], DataFrame]]:
+    """(file stem, header, body lines) for the five export CSVs."""
+    return [
+        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
+        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
+        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
+        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
+        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
+    ]
+
+
+def _metadata(
+    db: str, paths: dict[str, list[str]], counts: dict[str, int]
+) -> dict:
+    """The Neo4jCSVs-shaped metadata.json (reference
+    core/objects.py:93-115) over each CSV's body paths and count."""
+    return {
+        "db": db,
+        "nodes": [
+            {
+                "labels": [DOC_NODE],
+                "headerPath": "docs-header.csv",
+                "nodePaths": paths["docs"],
+                "nNodes": counts["docs"],
+            },
+            {
+                "labels": [NE_NODE],
+                "headerPath": "entities-header.csv",
+                "nodePaths": paths["entities"],
+                "nNodes": counts["entities"],
+            },
+        ],
+        "relationships": [
+            {
+                "types": [DOC_ROOT_TYPE],
+                "headerPath": "doc-roots-header.csv",
+                "relationshipPaths": paths["doc-roots"],
+                "nRelationships": counts["doc-roots"],
+            },
+            {
+                "types": [NE_APPEARS_IN_DOC],
+                "headerPath": "entity-docs-header.csv",
+                "relationshipPaths": paths["entity-docs"],
+                "nRelationships": counts["entity-docs"],
+            },
+            {
+                "types": [],
+                "headerPath": "email-docs-header.csv",
+                "relationshipPaths": paths["email-docs"],
+                "nRelationships": counts["email-docs"],
+            },
+        ],
+    }
+
+
 def export_graph_csvs(
     *,
     docs: DataFrame,
@@ -139,54 +200,15 @@ def export_graph_csvs(
     """Write the full reference-compatible export package."""
     d = Path(export_dir)
     d.mkdir(parents=True, exist_ok=True)
-    specs = [
-        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
-        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
-        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
-        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
-        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
-    ]
     counts = {}
-    for name, header, lines in specs:
+    for name, header, lines in _csv_specs(
+        docs, doc_roots, entities, appears_in, emails
+    ):
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
         counts[name] = _write_single(lines, d / f"{name}.csv", sort=sort)
-    metadata = {
-        "db": db,
-        "nodes": [
-            {
-                "labels": [DOC_NODE],
-                "headerPath": "docs-header.csv",
-                "nodePaths": ["docs.csv"],
-                "nNodes": counts["docs"],
-            },
-            {
-                "labels": [NE_NODE],
-                "headerPath": "entities-header.csv",
-                "nodePaths": ["entities.csv"],
-                "nNodes": counts["entities"],
-            },
-        ],
-        "relationships": [
-            {
-                "types": [DOC_ROOT_TYPE],
-                "headerPath": "doc-roots-header.csv",
-                "relationshipPaths": ["doc-roots.csv"],
-                "nRelationships": counts["doc-roots"],
-            },
-            {
-                "types": [NE_APPEARS_IN_DOC],
-                "headerPath": "entity-docs-header.csv",
-                "relationshipPaths": ["entity-docs.csv"],
-                "nRelationships": counts["entity-docs"],
-            },
-            {
-                "types": [],
-                "headerPath": "email-docs-header.csv",
-                "relationshipPaths": ["email-docs.csv"],
-                "nRelationships": counts["email-docs"],
-            },
-        ],
-    }
+    metadata = _metadata(
+        db, {name: [f"{name}.csv"] for name in counts}, counts
+    )
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)
     if as_tar:
@@ -225,16 +247,11 @@ def export_graph_csvs_distributed(
     spans two physical lines, so read.text would overcount."""
     d = Path(export_dir)
     d.mkdir(parents=True, exist_ok=True)
-    specs = [
-        ("docs", DOCS_HEADER, doc_nodes_csv_lines(docs)),
-        ("doc-roots", DOC_ROOTS_HEADER, doc_roots_csv_lines(doc_roots)),
-        ("entities", ENTITIES_HEADER, entities_csv_lines(entities)),
-        ("entity-docs", ENTITY_DOCS_HEADER, entity_docs_csv_lines(appears_in)),
-        ("email-docs", EMAIL_DOCS_HEADER, email_docs_csv_lines(emails)),
-    ]
     parts: dict[str, list[str]] = {}
     counts: dict[str, int] = {}
-    for name, header, lines in specs:
+    for name, header, lines in _csv_specs(
+        docs, doc_roots, entities, appears_in, emails
+    ):
         (d / f"{name}-header.csv").write_text(neo4j_header_line(header))
         part_dir = d / name
         lines = lines.persist()
@@ -248,43 +265,7 @@ def export_graph_csvs_distributed(
             for p in part_dir.iterdir()
             if p.name.startswith("part-")
         )
-    metadata = {
-        "db": db,
-        "nodes": [
-            {
-                "labels": [DOC_NODE],
-                "headerPath": "docs-header.csv",
-                "nodePaths": parts["docs"],
-                "nNodes": counts["docs"],
-            },
-            {
-                "labels": [NE_NODE],
-                "headerPath": "entities-header.csv",
-                "nodePaths": parts["entities"],
-                "nNodes": counts["entities"],
-            },
-        ],
-        "relationships": [
-            {
-                "types": [DOC_ROOT_TYPE],
-                "headerPath": "doc-roots-header.csv",
-                "relationshipPaths": parts["doc-roots"],
-                "nRelationships": counts["doc-roots"],
-            },
-            {
-                "types": [NE_APPEARS_IN_DOC],
-                "headerPath": "entity-docs-header.csv",
-                "relationshipPaths": parts["entity-docs"],
-                "nRelationships": counts["entity-docs"],
-            },
-            {
-                "types": [],
-                "headerPath": "email-docs-header.csv",
-                "relationshipPaths": parts["email-docs"],
-                "nRelationships": counts["email-docs"],
-            },
-        ],
-    }
+    metadata = _metadata(db, parts, counts)
     (d / "metadata.json").write_text(json.dumps(metadata, indent=2))
     _write_bulk_import_script(d)
     return metadata

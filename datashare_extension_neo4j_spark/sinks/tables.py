@@ -88,16 +88,19 @@ def _read_for_keys(
     )
 
 
-def write_bucketed_table(
-    df: DataFrame, path: str, name: str, buckets: int
+def write_graph_table(
+    df: DataFrame, path: str, name: str | None, buckets: int | None
 ) -> None:
-    """Write one graph table hash-partitioned on its merge key, with
-    the ``_n_buckets`` sidecar pinning N for later merges (empty
-    buckets leave no partition dir, so N can't be inferred from the
-    listing). An EMPTY frame is written plain instead: a partitioned
-    write of zero rows produces no files at all (schema unreadable),
-    so empty tables stay in the plain layout until data arrives."""
-    if df.isEmpty():
+    """Write one table. With ``buckets`` set and ``name`` a graph table
+    (TABLE_KEYS) it is hash-partitioned on its merge key, with the
+    ``_n_buckets`` sidecar pinning N for later merges (empty buckets
+    leave no partition dir, so N can't be inferred from the listing).
+    Otherwise it is written plain: stage outputs such as parsed and
+    mentions have no merge key, and an EMPTY frame stays plain because
+    a partitioned write of zero rows produces no files at all (schema
+    unreadable) — empty tables keep the plain layout until data
+    arrives."""
+    if not buckets or name not in TABLE_KEYS or df.isEmpty():
         df.write.mode("overwrite").parquet(path)
         return
     bucketize(df, TABLE_KEYS[name], buckets).write.mode(
@@ -165,22 +168,11 @@ def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
     out = transform(_read_table(spark, path))
     # materialize before overwriting the files the plan lazily reads
     staged = out.localCheckpoint()
+    buckets = int(sidecar.read_text()) if sidecar.exists() else None
     try:
-        if sidecar.exists():
-            write_bucketed_table(
-                staged, path, name, int(sidecar.read_text())
-            )
-        else:
-            staged.write.mode("overwrite").parquet(path)
+        write_graph_table(staged, path, name, buckets)
     finally:
         staged.unpersist()
-
-
-def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def materialize_graph(
@@ -205,26 +197,19 @@ def materialize_graph(
         "emails": g.emails,
     }
     paths = {name: f"{out_dir}/{name}" for name in frames}
-
-    def write_one(name: str, df: DataFrame) -> None:
-        if buckets:
-            write_bucketed_table(df, paths[name], name, buckets)
-        else:
-            _write(df, paths[name])
-
     if parallel:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(frames)) as ex:
             futs = [
-                ex.submit(write_one, name, df)
+                ex.submit(write_graph_table, df, paths[name], name, buckets)
                 for name, df in frames.items()
             ]
             for f in futs:
                 f.result()
     else:
         for name, df in frames.items():
-            write_one(name, df)
+            write_graph_table(df, paths[name], name, buckets)
     return paths
 
 
@@ -321,20 +306,6 @@ def merge_table(
         overwrite_parquet(spark, merged, path)
 
 
-def merge_docs(
-    spark: SparkSession, existing_path: str, updates: DataFrame
-) -> tuple[DataFrame, dict]:
-    """Incremental document upsert. Returns (merged, counters) with
-    the reference's ImportSummary shape (imports.py:130-135):
-    imported / nodes_created."""
-    old = _read_table(spark, existing_path)
-    imported = updates.count()
-    created = updates.join(old, "id", "left_anti").count()
-    return combine_docs(old, updates), {
-        "imported": imported, "nodes_created": created,
-    }
-
-
 def overwrite_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Safe read-modify-write for parquet (write tmp, swap). Iceberg
     MERGE INTO replaces this when a catalog is configured."""
@@ -400,12 +371,13 @@ def _created_count(
 
 def _incremental_merge(spark: SparkSession, g, run_dir: str) -> dict:
     docs_path = f"{run_dir}/docs"
-    new_docs = g.docs.drop("ann_mentions", "ann_edges")
+    # the docs rows keep their ann_mentions/ann_edges carriers, so a
+    # row written here has the schema `build` writes
     doc_counters = {
-        "imported": new_docs.count(),
-        "nodes_created": _created_count(spark, docs_path, new_docs, "docs"),
+        "imported": g.docs.count(),
+        "nodes_created": _created_count(spark, docs_path, g.docs, "docs"),
     }
-    merge_table(spark, docs_path, new_docs, "docs")
+    merge_table(spark, docs_path, g.docs, "docs")
 
     roots_path = f"{run_dir}/doc_roots"
     roots_created = _created_count(

@@ -288,3 +288,24 @@ def test_incremental_import_parses_once(spark, tmp_path):
     c = incremental_import(spark, tapped, run_dir)
     assert c["imported"] == 10
     assert acc.value == 10
+
+
+def test_incremental_docs_keep_ann_carriers(spark, tmp_path):
+    """Docs rows written by ``incremental`` carry the same
+    ann_mentions/ann_edges carriers as rows written by ``build``, so
+    the docs table has one schema whichever command wrote a row."""
+    pages_all = reference_pages(spark, n_docs=8)
+    first = pages_all.where(
+        F.regexp_extract("url", r"example-(\d+)", 1).cast("int") < 5
+    )
+    pages_path = str(tmp_path / "pages")
+    first.write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, pages_path, run_dir)
+
+    # re-ingests the first five ids and adds three new ones
+    incremental_import(spark, pages_all, run_dir)
+    docs = spark.read.parquet(f"{run_dir}/docs")
+    assert docs.count() == 8
+    assert docs.where(F.col("ann_edges").isNull()).count() == 0
+    assert docs.where(F.col("ann_mentions").isNull()).count() == 0

@@ -181,3 +181,56 @@ def test_pairs_hashed_intersection_matches_string_join(spark):
             .collect()
         )
         assert got_rows[0]["i"] == want, (a, b)
+
+
+def test_widen_probe_reads_current_input(spark, tmp_path):
+    """The widen decision is taken per call from the input's current
+    bytes: a path rewritten from tiny to >= n × 4 MB stops widening (no
+    memo serves the stale decision), and a frame with no input files
+    falls back to its partition count."""
+    import base64
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datashare_extension_neo4j_spark.queries import _mentions
+
+    n = spark.sparkContext.defaultParallelism
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    path = sf_dir / "documents.parquet"
+
+    def widened() -> bool:
+        m = _mentions(spark, str(sf_dir), widen=True)
+        plan = m._jdf.queryExecution().executedPlan().toString()
+        return "RoundRobinPartitioning" in plan
+
+    pq.write_table(
+        pa.table({"doc_id": [0, 1], "text": ["spark table", "window"]}),
+        path,
+    )
+    assert widened()
+
+    # incompressible text, stored uncompressed: > n × 4 MB on disk
+    rows = 4 * n + 1
+    texts = [
+        base64.b64encode(os.urandom(3 << 18)).decode() for _ in range(rows)
+    ]
+    pq.write_table(
+        pa.table({"doc_id": list(range(rows)), "text": texts}),
+        path,
+        compression="none",
+    )
+    assert path.stat().st_size >= n * 4 * 1024 * 1024
+    assert not widened()
+
+    from datashare_extension_neo4j_spark.session import widen
+
+    one = spark.createDataFrame(
+        [(i,) for i in range(8)], "x long"
+    ).coalesce(1)
+    assert one.inputFiles() == []
+    assert widen(one).rdd.getNumPartitions() == n
+    wide = one.repartition(n)
+    assert widen(wide) is wide
