@@ -17,12 +17,16 @@ no network to vendor one), so two fallbacks exist:
     buckets) — the same asymptotic shape as Iceberg's MERGE INTO file
     rewrite, expressed with vanilla parquet.
 
-``incremental_import`` auto-detects the layout per table.
+``incremental_import`` auto-detects the layout per table. Each table's
+MERGE is one pass that also yields its counters (update rows and rows
+created), the way the reference reads them off the Cypher
+``ResultSummary`` of the MERGE that writes the rows.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,41 +57,6 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
 
-def _touched_buckets(
-    updates: DataFrame, key_cols: list[str], n_buckets: int
-) -> list[int]:
-    """Distinct bucket ids the updates' merge keys hash into."""
-    return [
-        r[0]
-        for r in bucketize(updates, key_cols, n_buckets)
-        .select(BUCKET_COL)
-        .distinct()
-        .collect()
-    ]
-
-
-def _read_for_keys(
-    spark: SparkSession, path: str, keys: DataFrame, name: str
-) -> DataFrame:
-    """Stored rows that could share a merge key with ``keys``: on the
-    bucketed layout only the touched partitions are scanned (every row
-    whose key appears in ``keys`` hashes into a touched bucket, so
-    joins/anti-joins against this frame equal those against the full
-    table) — keeps incremental COUNTERS O(increment), not O(table).
-    Plain layout falls back to the full read."""
-    sidecar = Path(path) / "_n_buckets"
-    if not sidecar.exists():
-        return _read_table(spark, path)
-    touched = _touched_buckets(
-        keys, TABLE_KEYS[name], int(sidecar.read_text())
-    )
-    return (
-        spark.read.parquet(path)
-        .where(F.col(BUCKET_COL).isin(touched or [-1]))
-        .drop(BUCKET_COL)
-    )
-
-
 def write_graph_table(
     df: DataFrame, path: str, name: str | None, buckets: int | None
 ) -> None:
@@ -109,6 +78,15 @@ def write_graph_table(
     (Path(path) / "_n_buckets").write_text(str(buckets))
 
 
+class MergeResult(NamedTuple):
+    """What one bucketed MERGE did: the buckets it rewrote, the update
+    rows it read and the rows it added to the table."""
+
+    touched: list[int]
+    rows: int
+    created: int
+
+
 def merge_bucketed(
     spark: SparkSession,
     path: str,
@@ -116,17 +94,27 @@ def merge_bucketed(
     key_cols: list[str],
     combine,
     n_buckets: int,
-) -> list[int]:
+) -> MergeResult:
     """Partition-scoped MERGE: read only the buckets the increment
     touches, combine old ∪ new there, rewrite only those partitions
     (dynamic partition overwrite). ``combine(old, new) -> DataFrame``
-    holds the per-table ON MATCH semantics. Returns touched buckets."""
+    holds the per-table ON MATCH semantics.
+
+    Returns a ``MergeResult``. One per-bucket count of the updates
+    gives both the touched buckets and ``rows``. ``created`` is the
+    staged merged row count minus the old row count of the touched
+    buckets. That is exactly the number of update keys not stored
+    before, provided the stored table and ``combine``'s output are
+    unique on ``key_cols`` (migrations.CONSTRAINTS for the graph
+    tables; each combine either dedups/aggregates on the key or, for
+    docs, has its updates gated by ``assert_unique``)."""
     up = bucketize(updates, key_cols, n_buckets)
-    touched = [r[0] for r in up.select(BUCKET_COL).distinct().collect()]
-    if not touched:
+    per_bucket = up.groupBy(BUCKET_COL).count().collect()
+    if not per_bucket:
         # empty increment: nothing to merge — and a partitioned write
         # of zero rows would produce an unreadable tmp dir (no files)
-        return []
+        return MergeResult([], 0, 0)
+    touched = [r[0] for r in per_bucket]
     old = (
         spark.read.parquet(path)
         .where(F.col(BUCKET_COL).isin(touched))
@@ -151,12 +139,15 @@ def merge_bucketed(
     # dynamic-overwrite semantics unintentionally.
     staged = merged.localCheckpoint()
     try:
+        # counted before the overwrite: ``old`` is a lazy scan of the
+        # very partitions it replaces
+        created = staged.count() - old.count()
         staged.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(BUCKET_COL).parquet(path)
     finally:
         staged.unpersist()
-    return touched
+    return MergeResult(touched, sum(r[1] for r in per_bucket), created)
 
 
 def rewrite_table(spark: SparkSession, path: str, name: str, transform) -> None:
@@ -282,7 +273,7 @@ _ENFORCE_UNIQUE_UPDATES = {"docs"}
 
 def merge_table(
     spark: SparkSession, path: str, updates: DataFrame, name: str
-) -> None:
+) -> dict:
     """MERGE ``updates`` into the stored table, auto-detecting layout:
     bucketed → partition-scoped rewrite of touched buckets only;
     plain → full read-combine-overwrite.
@@ -290,7 +281,14 @@ def merge_table(
     Enforces the table's uniqueness constraint (migrations.CONSTRAINTS,
     the reference's constraint_document_unique_id analog) on the
     increment BEFORE merging — a batch that would corrupt the key
-    raises ConstraintViolation instead of silently landing."""
+    raises ConstraintViolation instead of silently landing.
+
+    Returns ``{"rows": update rows, "created": rows the MERGE added}``.
+    ``created`` is the merged minus the old row count, which equals the
+    update keys not stored before because the stored table and the
+    merged result are key-unique (see ``merge_bucketed``). The plain
+    layout takes the merged count from the ``__tmp`` copy it writes
+    anyway, and counts the old table before the swap."""
     if name in _ENFORCE_UNIQUE_UPDATES:
         from ..migrations import CONSTRAINTS, assert_unique
 
@@ -298,23 +296,30 @@ def merge_table(
     sidecar = Path(path) / "_n_buckets"
     if sidecar.exists():
         n = int(sidecar.read_text())
-        merge_bucketed(
+        r = merge_bucketed(
             spark, path, updates, TABLE_KEYS[name], COMBINE[name], n
         )
-    else:
-        merged = COMBINE[name](_read_table(spark, path), updates)
-        overwrite_parquet(spark, merged, path)
+        return {"rows": r.rows, "created": r.created}
+    rows = updates.count()
+    old = _read_table(spark, path)
+    n_old = old.count()
+    n_merged = overwrite_parquet(spark, COMBINE[name](old, updates), path)
+    return {"rows": rows, "created": n_merged - n_old}
 
 
-def overwrite_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Safe read-modify-write for parquet (write tmp, swap). Iceberg
-    MERGE INTO replaces this when a catalog is configured."""
+def overwrite_parquet(spark: SparkSession, df: DataFrame, path: str) -> int:
+    """Safe read-modify-write for parquet (write tmp, swap); returns
+    the row count written. Iceberg MERGE INTO replaces this when a
+    catalog is configured."""
     import shutil
 
     tmp = f"{path}__tmp"
     df.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+    staged = spark.read.parquet(tmp)
+    n = staged.count()
+    staged.write.mode("overwrite").parquet(path)
     shutil.rmtree(tmp, ignore_errors=True)
+    return n
 
 
 def incremental_import(
@@ -329,11 +334,12 @@ def incremental_import(
     array-union-merged, entities deduped. Returns counters.
 
     The Python parse runs ONCE per increment: the parse output is
-    stage-checkpointed to parquet (``checkpoint_dir``), so the 6-8
-    downstream actions (per-table counters + merges) all do pruned
-    columnar scans of the checkpoint instead of re-executing the
-    mapInPandas parse — the reference gets its counters free from the
-    Cypher ``ResultSummary``; this is the Spark equivalent."""
+    stage-checkpointed to parquet (``checkpoint_dir``), so the five
+    table MERGEs do pruned columnar scans of the checkpoint instead of
+    re-executing the mapInPandas parse. Each MERGE is one pass that
+    also yields its table's counters (``merge_table``) — the reference
+    gets its counters free from the Cypher ``ResultSummary``; this is
+    the Spark equivalent."""
     import shutil
     import uuid
 
@@ -357,53 +363,20 @@ def incremental_import(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _created_count(
-    spark: SparkSession, path: str, updates: DataFrame, name: str
-) -> int:
-    """Update keys not yet stored = rows/edges the merge will CREATE
-    (ON MATCH paths update in place, so only new keys add rows).
-    Anti-join against the partition-pruned slice — O(increment) on the
-    bucketed layout, never a full-table scan."""
-    keys = TABLE_KEYS[name]
-    old = _read_for_keys(spark, path, updates, name).select(*keys)
-    return updates.select(*keys).join(old, keys, "left_anti").count()
-
-
 def _incremental_merge(spark: SparkSession, g, run_dir: str) -> dict:
-    docs_path = f"{run_dir}/docs"
     # the docs rows keep their ann_mentions/ann_edges carriers, so a
     # row written here has the schema `build` writes
-    doc_counters = {
-        "imported": g.docs.count(),
-        "nodes_created": _created_count(spark, docs_path, g.docs, "docs"),
+    r = {
+        name: merge_table(spark, f"{run_dir}/{name}", getattr(g, name), name)
+        for name in TABLE_KEYS
     }
-    merge_table(spark, docs_path, g.docs, "docs")
-
-    roots_path = f"{run_dir}/doc_roots"
-    roots_created = _created_count(
-        spark, roots_path, g.doc_roots, "doc_roots"
-    )
-    merge_table(spark, roots_path, g.doc_roots, "doc_roots")
-
-    appears_path = f"{run_dir}/appears_in"
-    appears_created = _created_count(
-        spark, appears_path, g.appears_in, "appears_in"
-    )
-    merge_table(spark, appears_path, g.appears_in, "appears_in")
-
-    emails_path = f"{run_dir}/emails"
-    emails_created = _created_count(spark, emails_path, g.emails, "emails")
-    merge_table(spark, emails_path, g.emails, "emails")
-
-    ents_path = f"{run_dir}/entities"
-    ents_created = _created_count(spark, ents_path, g.entities, "entities")
-    merge_table(spark, ents_path, g.entities, "entities")
     return {
-        **doc_counters,
-        "relationships_created": roots_created
-        + appears_created
-        + emails_created,
-        "entities_created": ents_created,
+        "imported": r["docs"]["rows"],
+        "nodes_created": r["docs"]["created"],
+        "relationships_created": sum(
+            r[name]["created"] for name in ("doc_roots", "appears_in", "emails")
+        ),
+        "entities_created": r["entities"]["created"],
     }
 
 
@@ -418,8 +391,9 @@ def incremental_import_mentions(
     Mentions referencing unknown documents are dropped by the semi-join
     (the reference never imports an NE without its parent); the rest
     are aggregated to APPEARS_IN / SENT / RECEIVED edges + entities and
-    array-union-MERGEd into the existing tables. Returns the
-    ImportSummary-shaped counters (imports.py:130-135)."""
+    array-union-MERGEd into the existing tables. The semi-join runs
+    once: its result is persisted for the count and the three MERGEs.
+    Returns the ImportSummary-shaped counters (imports.py:130-135)."""
     from ..operators.edges import appears_in_edges, email_edges
     from ..operators.entities import entity_nodes
 
@@ -428,36 +402,24 @@ def incremental_import_mentions(
         spark.read.parquet(f"{run_dir}/docs")
         .select(F.col("id").alias("documentId"))
     )
-    m = mentions.join(doc_ids, "documentId", "left_semi")
-    imported = m.count()
-
-    appears_path = f"{run_dir}/appears_in"
-    new_appears = appears_in_edges(m)
-    appears_created = _created_count(
-        spark, appears_path, new_appears, "appears_in"
-    )
-    merge_table(spark, appears_path, new_appears, "appears_in")
-
-    emails_path = f"{run_dir}/emails"
-    new_emails = email_edges(m)
-    emails_created = _created_count(spark, emails_path, new_emails, "emails")
-    merge_table(spark, emails_path, new_emails, "emails")
-
-    ents_path = f"{run_dir}/entities"
-    new_ents = entity_nodes(m)
-    ents_created = _created_count(spark, ents_path, new_ents, "entities")
-    merge_table(spark, ents_path, new_ents, "entities")
+    m = mentions.join(doc_ids, "documentId", "left_semi").persist()
+    try:
+        imported = m.count()
+        r = {
+            name: merge_table(spark, f"{run_dir}/{name}", derive(m), name)
+            for name, derive in (
+                ("appears_in", appears_in_edges),
+                ("emails", email_edges),
+                ("entities", entity_nodes),
+            )
+        }
+    finally:
+        m.unpersist()
     return {
         "imported": imported,
         "skipped_orphans": total - imported,
         "nodes_created": 0,
-        "relationships_created": appears_created + emails_created,
-        "entities_created": ents_created,
+        "relationships_created": r["appears_in"]["created"]
+        + r["emails"]["created"],
+        "entities_created": r["entities"]["created"],
     }
-
-
-def merge_appears_in(
-    spark: SparkSession, existing_path: str, updates: DataFrame
-) -> DataFrame:
-    """Path wrapper over combine_appears_in (read old, return merged)."""
-    return combine_appears_in(_read_table(spark, existing_path), updates)

@@ -83,14 +83,14 @@ def merge_webgraph_batch(
     re-running the same batch converges to the same store). Returns
     counters: partial rows merged + buckets rewritten."""
     n_buckets = int((Path(store_path) / "_n_buckets").read_text())
-    part = host_graph_batch(links, batch_id)
-    touched = merge_bucketed(
-        spark, store_path, part, LEDGER_KEYS, _replace_batch, n_buckets
+    r = merge_bucketed(
+        spark, store_path, host_graph_batch(links, batch_id), LEDGER_KEYS,
+        _replace_batch, n_buckets,
     )
     return {
         "batch_id": batch_id,
-        "partial_rows": part.count(),
-        "touched_buckets": len(touched),
+        "partial_rows": r.rows,
+        "touched_buckets": len(r.touched),
     }
 
 

@@ -6,7 +6,7 @@ streaming ingest here is the Spark-native generalization: new page
 files land in the input directory, each micro-batch runs the same
 parse/NER/edge derivation, and ``foreachBatch`` applies the
 MERGE-with-array-union semantics (reference named_entities.py:84-97 =
-sinks/tables.merge_appears_in) against the graph tables — so batch
+sinks/tables.combine_appears_in) against the graph tables — so batch
 re-import and continuous ingest share one code path.
 
 ``trigger(availableNow=True)`` drains what exists and stops — used by

@@ -130,9 +130,15 @@ def test_manifest_resume(spark, tmp_path):
     assert mtime_forced > mtime_after
 
 
-def test_merge_appears_in(spark, tmp_path):
-    from datashare_extension_neo4j_spark.sinks.tables import merge_appears_in
+def merge_appears_in(spark, existing_path, updates):
+    """Read the stored edges and return them MERGEd with ``updates``
+    (combine_appears_in over a path; writes nothing)."""
+    from datashare_extension_neo4j_spark.sinks.tables import combine_appears_in
 
+    return combine_appears_in(spark.read.parquet(existing_path), updates)
+
+
+def test_merge_appears_in(spark, tmp_path):
     g = build_graph(reference_pages(spark, n_docs=6), cache=False)
     path = str(tmp_path / "appears")
     g.appears_in.write.parquet(path)

@@ -8,7 +8,10 @@ from pyspark.sql import functions as F
 
 from datashare_extension_neo4j_spark.fixtures import reference_pages
 from datashare_extension_neo4j_spark.manifest import run_pipeline
-from datashare_extension_neo4j_spark.sinks.tables import incremental_import
+from datashare_extension_neo4j_spark.sinks.tables import (
+    TABLE_KEYS,
+    incremental_import,
+)
 
 
 def test_reimport_updates_not_duplicates(spark, tmp_path):
@@ -267,8 +270,8 @@ def test_rebuild_with_different_buckets_invalidates_stages(spark, tmp_path):
 
 def test_incremental_import_parses_once(spark, tmp_path):
     """The mapInPandas parse must execute exactly once per increment:
-    the parse output is stage-checkpointed to parquet, so the 6-8
-    counter/merge actions re-read the checkpoint, never the parse. An
+    the parse output is stage-checkpointed to parquet, so the five
+    table MERGEs re-read the checkpoint, never the parse. An
     accumulator tap on the pages input counts how many times each page
     row flows into the parse — without the checkpoint it was ~6-8x."""
     pages = reference_pages(spark, n_docs=10)
@@ -309,3 +312,198 @@ def test_incremental_docs_keep_ann_carriers(spark, tmp_path):
     assert docs.count() == 8
     assert docs.where(F.col("ann_edges").isNull()).count() == 0
     assert docs.where(F.col("ann_mentions").isNull()).count() == 0
+
+
+# --------------------------------------------- counters and job budget
+
+
+def _late_mentions(spark):
+    from datashare_extension_neo4j_spark.schemas import MENTION_SCHEMA
+
+    rows = [
+        ("late-1", "doc-3", "PERSON", "O'Brien", "o'brien", 7, "CORENLP",
+         "en", [3], None),
+        ("late-2", "doc-3", "PERSON", "O'Brien", "o'brien", 7, "CORENLP",
+         "en", [9], None),
+        ("late-3", "doc-2", "EMAIL", "x@y.z", "x@y.z", 5, "CORENLP", "en",
+         [0], {"emailHeaderField": "tika_metadata_message_from"}),
+        # orphans: parents never imported
+        ("late-4", "doc-99", "PERSON", "ghost", "ghost", 5, "CORENLP",
+         "en", [1], None),
+        ("late-5", "doc-98", "EMAIL", "a@b.c", "a@b.c", 5, "CORENLP", "en",
+         [2], {"emailHeaderField": "tika_metadata_message_to"}),
+    ]
+    return spark.createDataFrame(rows, MENTION_SCHEMA)
+
+
+def _new_keys(spark, run_dir: str, name: str, updates) -> int:
+    """Distinct update keys absent from the stored table, by a pandas
+    anti-join of the key columns."""
+    keys = TABLE_KEYS[name]
+    new = updates.select(*keys).toPandas().drop_duplicates()
+    old = (
+        spark.read.parquet(f"{run_dir}/{name}")
+        .select(*keys)
+        .toPandas()
+        .drop_duplicates()
+    )
+    both = new.merge(old, on=keys, how="left", indicator=True)
+    return int((both["_merge"] == "left_only").sum())
+
+
+def _expected_increment(spark, pages, run_dir: str) -> dict:
+    from datashare_extension_neo4j_spark.pipeline import build_graph
+
+    g = build_graph(
+        pages, use_rule_ner=True, fuse_ner=True, include_text=False,
+        cache=False,
+    )
+    new = {t: _new_keys(spark, run_dir, t, getattr(g, t)) for t in TABLE_KEYS}
+    return {
+        "imported": len(g.docs.select("id").toPandas()),
+        "nodes_created": new["docs"],
+        "relationships_created": new["doc_roots"]
+        + new["appears_in"]
+        + new["emails"],
+        "entities_created": new["entities"],
+    }
+
+
+def _expected_mentions(spark, mentions, run_dir: str) -> dict:
+    from datashare_extension_neo4j_spark.operators.edges import (
+        appears_in_edges,
+        email_edges,
+    )
+    from datashare_extension_neo4j_spark.operators.entities import entity_nodes
+
+    pdf = mentions.toPandas()
+    stored = set(spark.read.parquet(f"{run_dir}/docs").select("id").toPandas()["id"])
+    kept = pdf[pdf["documentId"].isin(stored)]
+    m = spark.createDataFrame(kept, mentions.schema)
+    return {
+        "imported": len(kept),
+        "skipped_orphans": len(pdf) - len(kept),
+        "nodes_created": 0,
+        "relationships_created": _new_keys(
+            spark, run_dir, "appears_in", appears_in_edges(m)
+        )
+        + _new_keys(spark, run_dir, "emails", email_edges(m)),
+        "entities_created": _new_keys(
+            spark, run_dir, "entities", entity_nodes(m)
+        ),
+    }
+
+
+def test_counters_match_pandas_on_both_layouts(spark, tmp_path):
+    """Every incremental counter equals an independent pandas count of
+    the update keys not stored before the call, on a bucketed and on a
+    plain store, and the two layouts report the same counters."""
+    from datashare_extension_neo4j_spark.schemas import MENTION_SCHEMA
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        incremental_import_mentions,
+    )
+
+    pages_all = reference_pages(spark, n_docs=10)
+    first = pages_all.where(
+        F.regexp_extract("url", r"example-(\d+)", 1).cast("int") < 6
+    )
+    pages_path = str(tmp_path / "pages")
+    first.write.parquet(pages_path)
+    mentions = _late_mentions(spark)
+    empty = spark.createDataFrame([], MENTION_SCHEMA)
+
+    seen = {}
+    for layout, buckets in (("bucketed", 2), ("plain", None)):
+        run_dir = str(tmp_path / layout)
+        run_pipeline(spark, pages_path, run_dir, buckets=buckets)
+        got = []
+        # a mixed batch (six re-ingested ids, four new), then a full
+        # re-ingest that creates nothing
+        for _ in range(2):
+            want = _expected_increment(spark, pages_all, run_dir)
+            got.append(incremental_import(spark, pages_all, run_dir))
+            assert got[-1] == want, (layout, got[-1], want)
+        assert got[0]["nodes_created"] == 4
+        assert got[1]["nodes_created"] == 0
+        assert got[1]["relationships_created"] == 0
+        assert got[1]["entities_created"] == 0
+        # a mention batch with orphans, then an empty one
+        for batch in (mentions, empty):
+            want = _expected_mentions(spark, batch, run_dir)
+            got.append(incremental_import_mentions(spark, batch, run_dir))
+            assert got[-1] == want, (layout, got[-1], want)
+        assert got[2]["skipped_orphans"] == 2
+        assert got[2]["entities_created"] > 0
+        assert got[3] == {
+            "imported": 0,
+            "skipped_orphans": 0,
+            "nodes_created": 0,
+            "relationships_created": 0,
+            "entities_created": 0,
+        }
+        seen[layout] = got
+    assert seen["bucketed"] == seen["plain"]
+
+
+def test_mention_batch_job_budget(spark, tmp_path):
+    """One ``incremental_import_mentions`` call on a small bucketed
+    store runs fewer Spark jobs than the per-table counter passes did,
+    and scans the docs table once: the doc-id semi-join is computed
+    once and reused by the count and the three MERGEs."""
+    from datashare_extension_neo4j_spark.sinks.tables import (
+        incremental_import_mentions,
+    )
+
+    pages_path = str(tmp_path / "pages")
+    reference_pages(spark, n_docs=6).write.parquet(pages_path)
+    run_dir = str(tmp_path / "run")
+    run_pipeline(spark, pages_path, run_dir, buckets=2)
+    mentions = _late_mentions(spark)
+    docs_loc = f"{run_dir}/docs]"
+
+    tracker = spark.sparkContext.statusTracker()
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids() -> set:
+        ex = sql.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    # scan nodes print their location abbreviated to this many chars
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        jobs0 = set(tracker.getJobIdsForGroup(None))
+        ex0 = execution_ids()
+        c = incremental_import_mentions(spark, mentions, run_dir)
+        jobs = set(tracker.getJobIdsForGroup(None)) - jobs0
+        executions = execution_ids() - ex0
+    finally:
+        spark.conf.set(key, prev)
+    assert c["imported"] == 3 and c["skipped_orphans"] == 2
+
+    # the per-table counter passes ran 60 jobs for this call (a
+    # semi-join recomputed in every pass, two counter jobs per table)
+    assert len(jobs) < 60, len(jobs)
+
+    # docs scans that ran: a scan node over the docs table whose row
+    # metric got a value in that execution (a scan inside a cached
+    # plan is listed by every execution that reads the cache, but only
+    # the execution that fills the cache runs it)
+    docs_scans = 0
+    for e in executions:
+        values = sql.executionMetrics(e)
+        nodes = sql.planGraph(e).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if not node.name().startswith("Scan parquet"):
+                continue
+            if docs_loc not in node.desc():
+                continue
+            metrics = node.metrics()
+            docs_scans += any(
+                metrics.apply(k).name() == "number of output rows"
+                and not values.get(metrics.apply(k).accumulatorId()).isEmpty()
+                for k in range(metrics.size())
+            )
+    assert docs_scans == 1, docs_scans
